@@ -18,10 +18,8 @@ is recorded in flag_adjudication instead of failing the run.  Queries
 that error and queries whose time outgrew their output fail the run
 (exit 1 — the verify_all stage contract).
 
-Probe context (codegen + shuffle, sweep start/end) is recorded so a
-throttled window is visible inside the artifact, same as bench.py; raw
-seconds here are NOT normalized or drift-adjudicated — the only decision
-this artifact feeds is the slope flag, which is an intra-session ratio
+Timings come from bench.time_query (min-of-2 per tier).  The only
+decision this artifact feeds is the slope flag, an intra-session ratio
 and therefore host-mode-invariant to first order.
 
 Usage: python scripts/bench_registry.py            # all 411
@@ -36,7 +34,7 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-from bench import _calibration_probe, _shuffle_probe  # noqa: E402
+from bench import time_query  # noqa: E402
 from udacity_datalake_spark_spark.plans import QUERIES  # noqa: E402
 from udacity_datalake_spark_spark.session import get_session  # noqa: E402
 
@@ -61,21 +59,10 @@ DIGEST_OUTPUT_BOUND = {
 }
 
 
-def _time(spark, name: str, sf_dir: str, repeats: int = 2) -> float:
-    best = float("inf")
-    for _ in range(repeats):
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-        spark.catalog.clearCache()
-    return round(best, 4)
-
-
 def main() -> None:
     subs = sys.argv[1:]
     names = sorted(n for n in QUERIES if not subs or any(s in n for s in subs))
     spark = get_session(app_name="udacity-datalake-spark-bench-registry")
-    cal_start, shuf_start = _calibration_probe(spark), _shuffle_probe(spark)
 
     small: dict[str, float] = {}
     big: dict[str, float] = {}
@@ -87,8 +74,8 @@ def main() -> None:
         # lost 25 minutes of timings): record the error, keep going.
         try:
             # small tier first: it doubles as the warm-up for the plan shape
-            small[name] = _time(spark, name, SMALL)
-            big[name] = _time(spark, name, BIG)
+            small[name] = time_query(spark, name, SMALL, 2)
+            big[name] = time_query(spark, name, BIG, 2)
         except Exception as ex:
             errors[name] = str(ex).splitlines()[0][:200]
             small.pop(name, None)
@@ -103,7 +90,6 @@ def main() -> None:
         )
         sys.stdout.flush()
 
-    cal_end, shuf_end = _calibration_probe(spark), _shuffle_probe(spark)
     slopes = {
         n: round(big[n] / small[n], 2) if small[n] > 0 else 0.0 for n in big
     }
@@ -157,8 +143,6 @@ def main() -> None:
         "slopes": slopes,
         "big_secs": big,
         "small_secs": small,
-        "calibration": {"start": cal_start, "end": cal_end},
-        "shuffle_probe": {"start": shuf_start, "end": shuf_end},
     }
     if not subs:
         with open(OUT, "w") as fh:

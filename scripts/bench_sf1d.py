@@ -45,7 +45,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, "/root/repo")
 
@@ -56,6 +55,8 @@ from udacity_datalake_spark_spark.session import get_session
 SF01_DIR = "/root/testdata/sf0.1"
 SF1D_DIR = os.environ.get("SPARK_GRAFT_SF1D_DIR", "/root/repo/.localdata/sf1d")
 REPEATS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
+# identical plan shapes at the smallest SF fill codegen/JIT
+WARM_DIR = os.path.join(os.path.dirname(SF01_DIR), "sf0.001")
 
 # The queries whose sf1 slope ~=1 was fixture semantics (SCALE.md
 # r7 "slopes ~1 are fixture semantics" list + VERDICT r7 item #2).
@@ -67,16 +68,6 @@ DIM_BOUND = [
     "q319_link_prediction",
     "q373_apriori_triples",
 ]
-
-
-def time_query(spark, name: str, sf_dir: str, repeats: int) -> float:
-    best = float("inf")
-    for _ in range(repeats):
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-        spark.catalog.clearCache()
-    return round(best, 4)
 
 
 GRAPH_TRIO = [
@@ -111,21 +102,15 @@ def run_skew_variant() -> None:
     }
     print(f"graph shape: {shape}")
 
-    for name in GRAPH_TRIO:  # warm: identical plan shapes at tiny SF
-        QUERIES[name](spark, "/root/testdata/sf0.001").write.format("noop").mode(
-            "overwrite"
-        ).save()
-    spark.catalog.clearCache()
-    cal_start = bench._calibration_probe(spark)
+    bench.warm_up(spark, GRAPH_TRIO, WARM_DIR)
     t_uni: dict[str, float] = {}
     t_skw: dict[str, float] = {}
     for name in GRAPH_TRIO:
-        t_uni[name] = time_query(spark, name, SF1D_DIR, REPEATS)
-        t_skw[name] = time_query(spark, name, SF1DS_DIR, REPEATS)
+        t_uni[name] = bench.time_query(spark, name, SF1D_DIR, REPEATS)
+        t_skw[name] = bench.time_query(spark, name, SF1DS_DIR, REPEATS)
         ratio = round(t_skw[name] / t_uni[name], 2) if t_uni[name] > 0 else 0.0
         print(f"  {name}: sf1d {t_uni[name]}s  sf1ds {t_skw[name]}s  ratio {ratio}")
         sys.stdout.flush()
-    cal_end = bench._calibration_probe(spark)
     ratios = {
         n: (round(t_skw[n] / t_uni[n], 2) if t_uni[n] > 0 else 0.0) for n in t_skw
     }
@@ -141,7 +126,6 @@ def run_skew_variant() -> None:
         "queries_sf1ds": t_skw,
         "skew_cost_ratio": ratios,
         "flagged": flagged,
-        "calibration": {"start_sec": cal_start, "end_sec": cal_end},
     }
     try:
         with open("/root/repo/BENCH_SF1D.json") as f:
@@ -193,23 +177,15 @@ def main() -> None:
             )
     print(f"isomorphism invariant OK: {iso}")
 
-    # warm-up at the smallest SF fills codegen/JIT with identical shapes
-    for name in DIM_BOUND:
-        QUERIES[name](spark, "/root/testdata/sf0.001").write.format("noop").mode(
-            "overwrite"
-        ).save()
-    spark.catalog.clearCache()
-
-    cal_start = bench._calibration_probe(spark)
+    bench.warm_up(spark, DIM_BOUND, WARM_DIR)
     t_sf01: dict[str, float] = {}
     t_sf1d: dict[str, float] = {}
     for name in DIM_BOUND:
-        t_sf01[name] = time_query(spark, name, SF01_DIR, REPEATS)
-        t_sf1d[name] = time_query(spark, name, SF1D_DIR, REPEATS)
+        t_sf01[name] = bench.time_query(spark, name, SF01_DIR, REPEATS)
+        t_sf1d[name] = bench.time_query(spark, name, SF1D_DIR, REPEATS)
         slope = round(t_sf1d[name] / t_sf01[name], 2) if t_sf01[name] > 0 else 0.0
         print(f"  {name}: sf0.1 {t_sf01[name]}s  sf1d {t_sf1d[name]}s  slope {slope}")
         sys.stdout.flush()
-    cal_end = bench._calibration_probe(spark)
 
     slopes = {
         n: (round(t_sf1d[n] / t_sf01[n], 2) if t_sf01[n] > 0 else 0.0) for n in t_sf1d
@@ -224,11 +200,6 @@ def main() -> None:
         "isomorphism_invariant_q212": iso,
         "total_sf1d_sec": round(sum(t_sf1d.values()), 4),
         "total_sf01_sec": round(sum(t_sf01.values()), 4),
-        "calibration": {
-            "probe": "range(1e7) sum codegen, min of 3",
-            "start_sec": cal_start,
-            "end_sec": cal_end,
-        },
         "queries_sf01": t_sf01,
         "queries_sf1d": t_sf1d,
         "slopes": slopes,

@@ -1,7 +1,7 @@
 """Solo-query clean-window timing: python scripts/solo_bench.py q302_png_decode [q...]
 
 Times each named registry query at $SPARK_GRAFT_SF_DIR (default sf0.1)
-with the same warm-up + noop-sink + min-of-N protocol as bench.py, but
+with bench.py's own warm-up + noop-sink + min-of-N loop, but
 for a hand-picked subset — the tool for before/after measurements of a
 single plan change without paying for the full frozen-42 sweep.
 Writes nothing; prints one line per query.
@@ -11,10 +11,10 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench
 from udacity_datalake_spark_spark.plans import QUERIES
 from udacity_datalake_spark_spark.session import get_session
 
@@ -41,16 +41,9 @@ def main() -> None:
     warm_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
+    bench.warm_up(spark, names, warm_dir)
     for name in names:
-        QUERIES[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-    for name in names:
-        best = float("inf")
-        for _ in range(repeats):
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            spark.catalog.clearCache()
+        best = bench.time_query(spark, name, sf_dir, repeats)
         print(f"{name} {best:.3f}s (min of {repeats}, {sf_dir})")
 
 

@@ -381,8 +381,6 @@ def test_bench_headline_line_fits_tail():
             "unit": "sec",
             "n_queries": len(bench.HEADLINE),
             "sf": 0.1,
-            "calibration_sec": 9999.9999,
-            "n_regressed_normalized": 42,
         }
     )
     assert len(final_line) < 1800, (
@@ -412,167 +410,6 @@ def test_bench_headline_line_fits_tail():
         assert name in QUERIES, f"HEADLINE_FULL names unregistered query {name}"
     # the frozen set is a subset of the full sweep — diffs stay comparable
     assert set(bench.HEADLINE) <= set(bench.HEADLINE_FULL)
-
-
-def test_bench_mirror_target_policy():
-    """Mirror-target guard (round-7 VERDICT #3 / ADVICE r6): the committed
-    BENCH_LOCAL.json records the 66-query FULL sweep; a frozen-42 driver
-    run must mirror to BENCH_HEADLINE.json instead of clobbering it.
-    Statically asserts bench.py routes the frozen-set mirror away from
-    BENCH_LOCAL.json, and that the committed BENCH_LOCAL.json (when
-    present) is a full-sweep record."""
-    import inspect
-    import json
-    import os
-
-    import bench
-
-    src = inspect.getsource(bench.main)
-    # the mirror file name must be chosen by headline set, with the
-    # frozen set routed to BENCH_HEADLINE.json
-    assert 'mirror_name = (' in src and '"BENCH_HEADLINE.json"' in src
-    assert 'if headline is HEADLINE_FULL else "BENCH_HEADLINE.json"' in src
-
-    committed = os.path.join(os.path.dirname(bench.__file__), "BENCH_LOCAL.json")
-    if os.path.exists(committed):
-        with open(committed) as f:
-            record = json.load(f)
-        assert record.get("headline_set") == "full", (
-            "committed BENCH_LOCAL.json is not a full-sweep record — a "
-            "frozen-set run clobbered it; restore from git and re-run "
-            "with SPARK_GRAFT_BENCH_FULL=1"
-        )
-
-
-def test_bench_regression_rule():
-    """Regression-rule pin (round-8 VERDICT #1, twice amended): a drift
-    candidate must exceed the 1.3x bar in BOTH the normalized view
-    (raw_sec / calibration probe) AND the raw view (raw_sec / reference
-    raw_sec) of the committed BENCH_REF.json.  The two amendments each
-    killed a measured whole-sweep phantom class on frozen code: the
-    codegen probe and the exchange path move independently (x1.5-1.7
-    mode splits), so a throttle window inflates raw-only and a
-    fast-probe window inflates normalized-only — a real regression
-    inflates both.  The reference itself must have been taken in a
-    clean uniform window (probe <= REF_PROBE_CEILING) and cover every
-    frozen-42 query, else the rule silently stops guarding."""
-    import json
-    import os
-
-    import bench
-
-    assert bench.REGRESSION_FLAG_RATIO == 1.3, (
-        "the normalized-regression flag bar is policy (SCALE.md r8) — "
-        "change it there first"
-    )
-    ref_path = os.path.join(os.path.dirname(bench.__file__), bench.REF_NAME)
-    assert os.path.exists(ref_path), (
-        "BENCH_REF.json missing — the normalized-regression rule has no "
-        "reference; re-run bench.py in a clean window and commit it"
-    )
-    with open(ref_path) as f:
-        ref = json.load(f)
-    probe = ref.get("calibration", {}).get("mean_sec")
-    assert probe is not None and probe <= bench.REF_PROBE_CEILING, (
-        f"BENCH_REF.json was taken with probe {probe}s > ceiling "
-        f"{bench.REF_PROBE_CEILING}s — a throttled reference normalizes "
-        "future regressions away; retake it on an idle host"
-    )
-    # the reference's own window must have been UNIFORM (normalization
-    # is meaningless across a mid-sweep throttle transition)
-    s, e = ref["calibration"]["start_sec"], ref["calibration"]["end_sec"]
-    assert max(s, e) / min(s, e) <= bench.CAL_UNIFORM_MAX_RATIO, (
-        f"BENCH_REF.json probe window non-uniform (start {s}s / end {e}s)"
-    )
-    ref_norm = ref.get("queries_normalized", {})
-    missing = [n for n in bench.HEADLINE if n not in ref_norm]
-    assert not missing, f"BENCH_REF.json lacks normalized refs for {missing}"
-    # the rule must act on the normalized dict AND the raw view
-    import inspect
-
-    src = inspect.getsource(bench.main)
-    assert "for n, v in normalized.items():" in src
-    assert "REGRESSION_FLAG_RATIO" in src
-    # dual-view candidate rule (second r8 amendment): the raw ratio vs
-    # BENCH_REF.queries_raw must gate the candidate alongside normalized
-    assert "raw_ratio" in src and "queries_raw" in src
-    # persistence rule (late r8): confirmed regressions must come from
-    # _confirm_regressed (two consecutive uniform windows, both views),
-    # not from the single-sweep candidate list
-    assert "_confirm_regressed(" in src
-    assert "_prior_uniform_normalized(" in src
-    assert "_prior_uniform_raw(" in src
-    # reference raw seconds must exist for the raw view
-    assert all(n in ref.get("queries_raw", {}) for n in bench.HEADLINE)
-
-
-def test_bench_regression_persistence_rule():
-    """A drift flag counts only when it reproduces across two
-    consecutive uniform windows: single-window min-of-5 swings measured
-    ×0.38-1.70 on byte-identical code (SCALE.md r8), so one window is
-    never evidence.  Candidates without a prior measurement stay
-    unconfirmed; a reference refresh between sweeps stays coherent
-    because prior drift is recomputed against the CURRENT reference."""
-    import bench
-
-    ref_norm = {"qA": 10.0, "qB": 10.0, "qC": 10.0}
-    # qA: prior window also >1.3x -> confirmed.  qB: prior window was
-    # fine -> candidate only.  qC: no prior measurement -> unconfirmed.
-    prior = {"qA": 14.0, "qB": 10.2}
-    out = bench._confirm_regressed(["qA", "qB", "qC"], prior, ref_norm)
-    assert out == ["qA"]
-    assert bench._confirm_regressed(["qA"], {}, ref_norm) == []
-    # dual-view persistence (second r8 amendment): the prior window must
-    # also show the RAW exceedance — qA's prior normalized is >1.3x but
-    # its prior raw is flat, so a probe-mode swing stays unconfirmed
-    assert (
-        bench._confirm_regressed(
-            ["qA"], prior, ref_norm,
-            prior_raw={"qA": 1.0}, ref_raw={"qA": 1.0},
-        )
-        == []
-    )
-    assert bench._confirm_regressed(
-        ["qA"], prior, ref_norm, prior_raw={"qA": 1.5}, ref_raw={"qA": 1.0}
-    ) == ["qA"]
-    # prior lookup: most recent committed uniform entry of the same
-    # sf/set must exist in bench_history.jsonl for the frozen-42 series
-    got = bench._prior_uniform_normalized(0.1, "frozen42")
-    assert got, "bench_history.jsonl has no uniform frozen42 sf0.1 entry"
-    assert all(isinstance(v, (int, float)) for v in got.values())
-
-
-def test_bench_history_series():
-    """Committed round-over-round series (round-8 VERDICT #6): bench runs
-    append to bench_history.jsonl so normalized per-query diffs r6→r7→r8
-    never depend on the driver's 2000-char stdout tail.  The committed
-    file must parse line-wise and contain the reconstructed r06/r07
-    frozen-42 entries."""
-    import json
-    import os
-
-    import bench
-
-    path = os.path.join(os.path.dirname(bench.__file__), bench.HISTORY_NAME)
-    assert os.path.exists(path), "bench_history.jsonl missing"
-    rounds = set()
-    with open(path) as f:
-        for line in f:
-            rec = json.loads(line)
-            if rec.get("ref_swap"):
-                # reference-swap audit record (round 9,
-                # scripts/retake_ref.py): carries the old/new probe and
-                # prior-entry drift recomputed against the new
-                # reference instead of sweep timings
-                assert "drift_recomputed_vs_new_ref" in rec
-                continue
-            assert "queries" in rec and "total_sec" in rec
-            rounds.add(rec.get("round"))
-    assert {"r06", "r07"} <= rounds, (
-        "seeded r06/r07 reconstruction entries missing from bench_history"
-    )
-    src = __import__("inspect").getsource(bench.main)
-    assert "HISTORY_NAME" in src, "bench.main no longer appends history"
 
 
 def test_sharded_runner_covers_all_test_modules():
@@ -638,101 +475,6 @@ def test_sharded_runner_covers_all_test_modules():
         )
 
 
-def test_bench_missing_raw_symmetry():
-    """ADVICE r8: the candidate stage fails OPEN when the reference
-    lacks a raw entry, so the confirm stage must not fail CLOSED on the
-    same gap — otherwise an old-format reference makes a real
-    regression unconfirmable with no trace.  Both stages now fail open
-    on a per-query missing raw datum and record the query in a
-    raw_view_missing list; and 0.0 timings are treated explicitly (a
-    zero can't form a ratio, but it must not silently disable the check
-    the way implicit truthiness did)."""
-    import bench
-
-    ref_norm = {"qA": 10.0, "qB": 10.0}
-    prior = {"qA": 14.0, "qB": 14.0}
-    # qA has raw data in both windows and is flat there -> dual view
-    # kills it; qB's raw datum is MISSING from the prior window -> fail
-    # open (confirmed on normalized persistence) and recorded
-    missing: list = []
-    out = bench._confirm_regressed(
-        ["qA", "qB"],
-        prior,
-        ref_norm,
-        prior_raw={"qA": 1.0},
-        ref_raw={"qA": 1.0, "qB": 1.0},
-        missing_raw_out=missing,
-    )
-    assert out == ["qB"]
-    assert missing == ["qB"]
-    # a 0.0 raw reference is unusable-for-a-ratio, handled as the
-    # explicit missing-data path (fail open + recorded), never a crash
-    # or a silent drop
-    missing2: list = []
-    out2 = bench._confirm_regressed(
-        ["qA"], prior, ref_norm, prior_raw={"qA": 1.5}, ref_raw={"qA": 0.0},
-        missing_raw_out=missing2,
-    )
-    assert out2 == ["qA"] and missing2 == ["qA"]
-    # explicit-guard helper: absent and zero both refuse, positives pass
-    assert bench._usable(1.0, 0.5)
-    assert not bench._usable(None)
-    assert not bench._usable(0.0)
-    # the main loop must surface the degradation in both stdout and the
-    # mirror artifact
-    import inspect
-
-    src = inspect.getsource(bench.main)
-    assert src.count('"raw_view_missing"') >= 2
-
-
-def test_bench_ref_retake_trigger():
-    """Round-9 VERDICT #2: bench.py enforces SCALE.md's own retake
-    policy — a frozen-42 uniform sweep with probe <= 0.08 that beats
-    the committed reference's probe prints reference_retake_available;
-    the swap itself only happens through scripts/retake_ref.py, which
-    validates window uniformity, the retake bar, full dual-view
-    coverage, and strictly-tighter probes before writing."""
-    import inspect
-    import os
-    import subprocess
-    import sys
-
-    import bench
-
-    assert bench.REF_RETAKE_PROBE == 0.08  # SCALE.md policy value
-    src = inspect.getsource(bench.main)
-    assert "reference_retake_available" in src
-    assert "REF_RETAKE_PROBE" in src
-    # the swap script must refuse a candidate that misses the bar; the
-    # committed BENCH_HEADLINE at this round's start (probe 0.0827) or
-    # any synthetic over-bar candidate exercises the refusal path
-    import json
-    import tempfile
-
-    bad = {
-        "headline_set": "frozen42",
-        "sf": 0.1,
-        "calibration": {"start_sec": 0.1, "end_sec": 0.1, "mean_sec": 0.1},
-        "queries": {},
-        "queries_normalized": {},
-    }
-    with tempfile.NamedTemporaryFile("w", suffix=".json", delete=False) as f:
-        json.dump(bad, f)
-        path = f.name
-    try:
-        proc = subprocess.run(
-            [sys.executable, "scripts/retake_ref.py", path, "--dry-run"],
-            cwd=os.path.dirname(bench.__file__),
-            capture_output=True,
-            text=True,
-        )
-        assert proc.returncode == 1
-        assert "REFUSED" in proc.stderr
-    finally:
-        os.unlink(path)
-
-
 def test_solo_bench_validates_before_session():
     """ADVICE r7 (judge re-flagged r8): an unknown query name must exit
     2 with a message BEFORE the Spark session starts, not raise a raw
@@ -754,36 +496,6 @@ def test_solo_bench_validates_before_session():
     assert proc.returncode == 2
     assert "unknown query name" in proc.stderr
     assert "q999_not_a_query" in proc.stderr
-
-
-def test_bench_ref_is_series_median():
-    """Round-9 amendment pin: the committed BENCH_REF must be a
-    per-query dual-view MEDIAN over >=6 committed uniform windows —
-    a single-window reference carries its probe's mode bias wholesale
-    into the normalized view (measured 1.4-1.65x below the series
-    medians on ALL 42 queries, SCALE.md r9).  A future overwrite from
-    one window (retake_ref.py's candidate mode or a manual edit) must
-    trip this loudly."""
-    import json
-    import os
-
-    import bench
-
-    with open(os.path.join(os.path.dirname(bench.__file__), bench.REF_NAME)) as f:
-        ref = json.load(f)
-    cal = ref.get("calibration", {})
-    assert cal.get("n_windows", 0) >= 6, (
-        "BENCH_REF is not a series-median reference — rebuild with "
-        "scripts/retake_ref.py --from-series (SCALE.md r9 amendment)"
-    )
-    probes = cal.get("member_window_probes", [])
-    assert len(probes) == cal["n_windows"]
-    # the median must actually be the median of the recorded members
-    s = sorted(probes)
-    n = len(s)
-    want = s[n // 2] if n % 2 else round((s[n // 2 - 1] + s[n // 2]) / 2, 4)
-    assert abs(cal["mean_sec"] - want) < 1e-9
-    assert "--from-series" in ref.get("provenance", "")
 
 
 def test_bench_duration_scaled_repeats():
@@ -811,6 +523,93 @@ def test_bench_duration_scaled_repeats():
     assert simulate(0.3, 5) == 7   # stops once 2s of work accumulated
     assert simulate(0.45, 5) == 5  # 5 x 0.45 = 2.25s >= 2s at base
     assert simulate(0.1, 1) == 1   # explicit fast mode: no extension
+
+
+# Spark jobs each frozen-42 builder starts before the caller runs any
+# action, at sf0.01.  Reading a parquet table costs one schema-inference
+# job, so a builder that reads k tables and runs no action starts k jobs;
+# anything above that is an eager action inside the builder.  q311's
+# count includes its first-build hot-gram probe (memoized per dataset,
+# so a later build in the same session starts 1).  Upper bounds: a
+# builder that turns lazier passes, one that gains an action fails.
+HEADLINE_BUILD_JOBS = {
+    "q01_pricing_summary": 1,
+    "q05_inner_join": 2,
+    "q06_left_join_agg": 2,
+    "q07_or_join_decomposed": 2,
+    "q10_multi_hop_join": 5,
+    "q61_local_supplier_volume": 6,
+    "q85_market_share": 7,
+    "q91_large_volume_customers": 3,
+    "q13_topk_per_group": 1,
+    "q34_asof_join": 1,
+    "q35_range_band_join": 1,
+    "q38_salted_join": 2,
+    "q40_dedup_exact": 1,
+    "q77_repetition_metrics": 1,
+    "q65_sessionize": 1,
+    "q72_dq_report": 1,
+    "q95_dedup_corpus": 14,
+    "q109_hot_key_skew_join": 7,
+    "q110_sequence_packing": 1,
+    "q126_event_funnel": 1,
+    "q133_bm25_retrieval": 1,
+    "q143_pmi_cooccurrence": 1,
+    "q154_point_in_time_join": 1,
+    "q179_trigram_novelty": 1,
+    "q189_curriculum_phases": 1,
+    "q195_curation_pipeline": 14,
+    "q210_ks_two_sample": 1,
+    "q212_triangle_count": 14,
+    "q215_heavy_hitter_bigrams": 1,
+    "q218_grid_spatial_join": 1,
+    "q222_abc_xyz_classification": 2,
+    "q229_item_neighbors": 1,
+    "q232_shingle_containment": 1,
+    "q246_monetary_unit_sampling": 1,
+    "q271_late_event_rate": 1,
+    "q301_sparse_cosine_topk": 1,
+    "q302_png_decode": 1,
+    "q309_bloom_decontamination": 1,
+    "q311_exact_substring_spans": 6,
+    "q319_link_prediction": 10,
+    "q363_heaps_law": 1,
+    "q373_apriori_triples": 8,
+}
+
+
+def test_headline_builders_job_budget(spark):
+    """Build-time job gate: constructing a frozen-42 query must not start
+    more Spark jobs than HEADLINE_BUILD_JOBS allows.  The plan-budget
+    snapshot (tests/test_plans.py) pins what the returned plan does; this
+    pins what the builder does before returning it, so an eager
+    count/collect added to a builder fails here in any timing window."""
+    import os
+
+    import pytest
+
+    import bench
+    from udacity_datalake_spark_spark import scratch
+    from udacity_datalake_spark_spark.plans import QUERIES
+
+    from .conftest import SF_DIR
+
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"no sf0.01 tier next to {SF_DIR}")
+    assert list(HEADLINE_BUILD_JOBS) == bench.HEADLINE
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    over = {}
+    try:
+        for name, budget in HEADLINE_BUILD_JOBS.items():
+            before = dag.numTotalJobs()
+            QUERIES[name](spark, sf_dir)
+            started = dag.numTotalJobs() - before
+            if started > budget:
+                over[name] = (started, budget)
+    finally:
+        scratch.release()
+    assert not over, f"builders started more jobs than budgeted: {over}"
 
 
 def test_file_shard_hook_partitions_collection():

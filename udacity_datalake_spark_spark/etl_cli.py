@@ -11,9 +11,10 @@ Differences by design:
 - storage URIs are opaque — local paths in tests, ``s3a://`` in
   production with ``session.s3a_conf()`` — so no bucket bootstrap logic
   lives here (reference buckets_dropcreate.py:8-63 is AWS account
-  plumbing, out of engine scope);
-- songs/artists are reused in-memory between the two pipelines instead
-  of re-read from freshly-written parquet (same values, one lineage).
+  plumbing, out of engine scope).
+
+Like the reference (etl.py:139-146), the log pipeline re-reads
+songs/artists from the parquet the song pipeline just wrote.
 
 Usage (spark-submit takes a script path, not a module flag)::
 

@@ -154,9 +154,9 @@ def process_song_data(spark, song_data: DataFrame, output_dir: str) -> None:
 def process_log_data(spark, log_data: DataFrame, output_dir: str) -> None:
     """Pipeline 2 (reference etl.py:65-173): users, time, songplays.
 
-    Unlike the reference, songs/artists are reused in-memory rather than
-    re-read from the just-written parquet — same values, one lineage;
-    the read-back shape is reproduced by ``songs_readback_shape``.
+    Like the reference (etl.py:139-146), songs/artists are re-read from
+    the parquet ``process_song_data`` just wrote under ``output_dir``;
+    ``songs_readback_shape`` reproduces the reference's read-back columns.
     """
     events = filter_songplay_events(log_data)
     write_parquet(build_users(events), f"{output_dir}/users", target_files=1)

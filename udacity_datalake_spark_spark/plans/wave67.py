@@ -199,7 +199,9 @@ def apriori_triples(
     # enumeration at the source — exactly the regime that matters at
     # 100 TB.  With array-shaped baskets the filter is a map-side
     # array_intersect against the broadcast member array — no explode,
-    # no re-grouping exchange.
+    # no re-grouping exchange.  Its result is re-sorted: the positional
+    # triple enumeration below needs ascending arrays, and
+    # array_intersect does not document its output order.
     if n_items_universe > prefilter_universe_gt:
         members = (
             pairs.select(F.col("p1").alias("p"))
@@ -209,7 +211,9 @@ def apriori_triples(
         )
         enum_baskets = (
             baskets.crossJoin(F.broadcast(members))
-            .select(F.array_intersect("__ps", "__members").alias("__ps"))
+            .select(
+                F.sort_array(F.array_intersect("__ps", "__members")).alias("__ps")
+            )
         )
     else:
         enum_baskets = baskets
