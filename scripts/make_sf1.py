@@ -2,7 +2,7 @@
 runs — round-5 VERDICT #5: thresholds, DECIMAL overflow headroom, rsd
 bands, and LSH occupancy only get interesting at volume, and the sandbox
 ships no sf1.  /root/testdata is read-only, so the fixture lands in
-/root/repo/.localdata/sf1 (gitignored; ~170 MB).
+.localdata/sf1 in the repo (gitignored; ~170 MB).
 
 Construction: deterministic 10x keyed replication of sf0.1 (no RNG — a
 re-run is byte-identical), derived ONLY from the public fixture:
@@ -45,6 +45,13 @@ graph structure on fresh keys:
   referentially intact.
 Only the relational tables are emitted for sf1d (the dim-bound subset
 touches nothing else); corpus tables come from the sf1 tier.
+Post-write check: isomorphic replicas make q212's (n_nodes, n_edges,
+n_triangles) at sf1d EXACTLY 10x the sf0.1 values — the scale-adaptive
+edge threshold (1.1x mean shared parts) is distribution-invariant across
+identical replicas.  The build computes both with q212's DuckDB oracle
+and exits 1 on a mismatch, so a broken fixture (or edge rule) is
+rejected once, when it is written, before any tier times the wrong
+graph.
 
 Round 9 adds the SKEWED-DIM variant (VERDICT r8 #5): ``--grow-dims
 --skew`` writes .localdata/sf1ds — same 10 dim replicas and same ×10
@@ -73,9 +80,23 @@ import sys
 
 import duckdb
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
 SRC = "/root/testdata/sf0.1"
 REPLICAS = 10
 DIM = 64
+
+
+def graph_shape(sf_dir: str) -> tuple[int, int, int]:
+    """q212's (n_nodes, n_edges, n_triangles) at ``sf_dir``, from its
+    DuckDB oracle over the tier's lineitem."""
+    from udacity_datalake_spark_spark.plans import ORACLE_SQL
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{sf_dir}/lineitem.parquet'")
+    row = con.execute(ORACLE_SQL["q212_triangle_count"]).fetchone()
+    return tuple(int(v) for v in row)
 
 
 def main() -> None:
@@ -85,8 +106,8 @@ def main() -> None:
     if skew and not grow_dims:
         sys.exit("--skew requires --grow-dims (it skews the dim attachment)")
     argv = [a for a in argv if a not in ("--grow-dims", "--skew")]
-    default_out = "/root/repo/.localdata/" + (
-        "sf1ds" if skew else ("sf1d" if grow_dims else "sf1")
+    default_out = os.path.join(
+        REPO, ".localdata", "sf1ds" if skew else ("sf1d" if grow_dims else "sf1")
     )
     out = argv[0] if argv else default_out
     os.makedirs(out, exist_ok=True)
@@ -196,6 +217,14 @@ def main() -> None:
             """,
         )
         print(f"wrote {out}")
+        if not skew:
+            base, grown = graph_shape(SRC), graph_shape(out)
+            if grown != tuple(REPLICAS * v for v in base):
+                sys.exit(
+                    f"q212 (n_nodes, n_edges, n_triangles) at {out} is {grown}, "
+                    f"not {REPLICAS} x {base} at sf0.1: fixture or edge rule broken"
+                )
+            print(f"q212 isomorphism OK: {grown} = {REPLICAS} x {base}")
         return
 
     for dim_table in ("region", "nation", "customer", "supplier", "part"):

@@ -32,9 +32,12 @@ are sloped on it; ``operators.similarity.lsh_bucket_stats`` plus the
 ``max_bucket_rows`` sub-split guard cover the blowup the slope would
 expose (tests/test_llm_ops.py).
 
-Output: one JSON line {"metric": "skew_slopes", "slopes": {...},
-"flagged_ge20x": [...], "small_secs": {...}, "big_secs": {...}} —
-recorded as a table in SCALE.md.
+Both decades time their queries through ``bench.sweep`` — the same
+warm-up, min-of-N loop, flag bar and output-growth check as bench.py —
+and print one JSON line, {"metric": "skew_slopes", ...} or
+{"metric": "skew_slopes_sf1", ...}, carrying the sweep record (seconds
+at both tiers, slopes, bar, flagged, adjudication, errors), recorded as
+a table in SCALE.md.  The script exits 1 when a sweep does.
 
 Round 8 (`--sf1`, VERDICT r7 #3): the adversarial corpus at the SECOND
 decade — 50 000 skewed docs (10× the big tier), the .localdata/sf1
@@ -57,6 +60,8 @@ deliberate, logged deviations from a blind ×10:
 Usage: python scripts/skew_bench.py          # sf0.01→sf0.1 decade
        python scripts/skew_bench.py --sf1    # sf0.1→sf1 decade
                                              # (needs .localdata/sf1)
+       python scripts/skew_bench.py --q148-evidence
+       python scripts/skew_bench.py --hot-gram-evidence
 """
 
 from __future__ import annotations
@@ -67,11 +72,13 @@ import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import numpy as np
 
 import bench
+from udacity_datalake_spark_spark import scratch
 
 SKEW_QUERIES = [
     "q38_salted_join",
@@ -206,14 +213,15 @@ def dedup_secs(spark, sf_dir: str, collapse: bool) -> float:
     return bench.time_frame(build, 2)
 
 
-def run_sf1_tier(spark, tmp: str) -> None:
+def run_sf1_tier(spark, tmp: str) -> int:
     """The adversarial decade above: big (5k docs / sf0.1 facts / 20k
     vecs) → huge (50k docs / sf1 facts / guarded-ANN 200k vecs; q56 on
     a √10-vector = 10×-output corpus).  Prints one JSON line
-    {"metric": "skew_slopes_sf1", ...} for the SCALE.md table."""
+    {"metric": "skew_slopes_sf1", ...} for the SCALE.md table and
+    returns the sweeps' exit code."""
     from udacity_datalake_spark_spark.plans import QUERIES
 
-    sf1_dir = "/root/repo/.localdata/sf1"
+    sf1_dir = os.path.join(REPO, ".localdata", "sf1")
     if not os.path.isdir(sf1_dir):
         sys.exit("--sf1 needs .localdata/sf1 — run scripts/make_sf1.py first")
 
@@ -252,54 +260,33 @@ def run_sf1_tier(spark, tmp: str) -> None:
         "scale paths q49/q60 measured instead"
     }
 
-    # warm-up on the big tier (same plan shapes)
-    bench.warm_up(spark, corpus_queries + ["q56_embedding_near_dup"], big)
-
-    big_secs: dict[str, float] = {}
-    huge_secs: dict[str, float] = {}
-    for name in corpus_queries:
-        big_secs[name] = bench.time_query(spark, name, big, 2)
-        huge_secs[name] = bench.time_query(spark, name, huge, 2)
-        print(
-            f"  {name}: big {big_secs[name]}s  huge {huge_secs[name]}s  "
-            f"slope {round(huge_secs[name] / big_secs[name], 2)}"
-        )
-        sys.stdout.flush()
-
-    # q56: time on the output-decade corpus and record n_pairs per tier
-    big_secs["q56_embedding_near_dup"] = bench.time_query(
-        spark, "q56_embedding_near_dup", big, 2
-    )
-    huge_secs["q56_embedding_near_dup"] = bench.time_query(
-        spark, "q56_embedding_near_dup", huge_q56, 2
-    )
-    pairs_big = QUERIES["q56_embedding_near_dup"](spark, big).count()
-    spark.catalog.clearCache()
-    pairs_huge = QUERIES["q56_embedding_near_dup"](spark, huge_q56).count()
-    spark.catalog.clearCache()
-    q56 = {
-        "n_vecs": {"big": 20000, "huge": n_vec_q56},
-        "n_pairs": {"big": pairs_big, "huge": pairs_huge},
-        "sec_per_mpair": {
-            "big": round(big_secs["q56_embedding_near_dup"] * 1e6 / pairs_big, 3),
-            "huge": round(huge_secs["q56_embedding_near_dup"] * 1e6 / pairs_huge, 3),
-        },
-    }
-    print(f"  q56 output-bound evidence: {q56}")
-
-    slopes = {
-        n: round(huge_secs[n] / big_secs[n], 2) if big_secs[n] > 0 else 0.0
-        for n in huge_secs
-    }
+    record = bench.sweep(spark, corpus_queries, huge, big, 2)
+    # q56: timed on its output-decade corpus, with n_pairs per tier
+    # (flat sec-per-pair is the output-bound proof)
+    q56_name = "q56_embedding_near_dup"
+    q56 = bench.sweep(spark, [q56_name], huge_q56, big, 2)
+    if q56_name in q56["base_queries"]:
+        n_pairs = {}
+        for tier, d in (("big", big), ("huge", huge_q56)):
+            n_pairs[tier] = QUERIES[q56_name](spark, d).count()
+            scratch.release()
+        tier_secs = {
+            "big": q56["base_queries"][q56_name],
+            "huge": q56["queries"][q56_name],
+        }
+        q56["output_bound"] = {
+            "n_vecs": {"big": 20000, "huge": n_vec_q56},
+            "n_pairs": n_pairs,
+            "sec_per_mpair": {
+                t: round(tier_secs[t] * 1e6 / max(1, n_pairs[t]), 3) for t in n_pairs
+            },
+        }
     print(
         json.dumps(
             {
                 "metric": "skew_slopes_sf1",
-                "slopes": slopes,
-                "flagged_ge20x": [n for n, s in slopes.items() if s >= 20.0],
-                "big_secs": big_secs,
-                "huge_secs": huge_secs,
-                "q56_output_bound": q56,
+                **record,
+                q56_name: q56,
                 "skipped": skipped,
             }
         )
@@ -330,6 +317,7 @@ def run_sf1_tier(spark, tmp: str) -> None:
             }
         )
     )
+    return max(record["exit"], q56["exit"])
 
 
 def run_q148_evidence(spark, tmp: str) -> None:
@@ -485,45 +473,14 @@ def run_hot_gram_evidence(spark, tmp: str) -> None:
     print(json.dumps({"metric": "hot_gram_guard_evidence", "tiers": result}))
 
 
-def main() -> None:
-    from udacity_datalake_spark_spark.session import get_session
-
-    spark = get_session(app_name="skew-bench")
-    tmp = tempfile.mkdtemp(prefix="skewfix-")
-    if "--hot-gram-evidence" in sys.argv:
-        run_hot_gram_evidence(spark, tmp)
-        spark.stop()
-        return
-    if "--q148-evidence" in sys.argv:
-        run_q148_evidence(spark, tmp)
-        spark.stop()
-        return
-    if "--sf1" in sys.argv:
-        run_sf1_tier(spark, tmp)
-        spark.stop()
-        return
+def run_decade(spark, tmp: str) -> int:
+    """The sf0.01→sf0.1 adversarial decade, then the MinHash occupancy
+    guard on the identical-heavy corpus; returns the sweep's exit code."""
     small, big = f"{tmp}/small", f"{tmp}/big"
     build_fixture(spark, "/root/testdata/sf0.01", small, 500)
     build_fixture(spark, "/root/testdata/sf0.1", big, 5000)
-
-    bench.warm_up(spark, SKEW_QUERIES, small)
-    small_secs = {n: bench.time_query(spark, n, small, 2) for n in SKEW_QUERIES}
-    big_secs = {n: bench.time_query(spark, n, big, 2) for n in SKEW_QUERIES}
-    slopes = {
-        n: round(big_secs[n] / small_secs[n], 2) if small_secs[n] > 0 else 0.0
-        for n in SKEW_QUERIES
-    }
-    print(
-        json.dumps(
-            {
-                "metric": "skew_slopes",
-                "slopes": slopes,
-                "flagged_ge20x": [n for n, s in slopes.items() if s >= 20.0],
-                "small_secs": small_secs,
-                "big_secs": big_secs,
-            }
-        )
-    )
+    record = bench.sweep(spark, SKEW_QUERIES, big, small, 2)
+    print(json.dumps({"metric": "skew_slopes", **record}))
 
     # Round-6: MinHash occupancy-guard evidence on the identical-heavy
     # corpus (30% byte-exact copies of 20 masters).  Time the q95 dedup
@@ -531,10 +488,7 @@ def main() -> None:
     # identical group quadratically in EVERY band; collapse emits
     # linear star edges, so its slope stays ~data-linear.
     small_x, big_x = f"{tmp}/small_exact", f"{tmp}/big_exact"
-    for out_dir, base, n_docs in (
-        (small_x, "/root/testdata/sf0.01", 500),
-        (big_x, "/root/testdata/sf0.1", 5000),
-    ):
+    for out_dir, n_docs in ((small_x, 500), (big_x, 5000)):
         os.makedirs(out_dir, exist_ok=True)
         spark.createDataFrame(
             build_skewed_documents(n_docs, exact_spam=True),
@@ -553,7 +507,22 @@ def main() -> None:
             "slope": round(b / s, 2) if s > 0 else 0.0,
         }
     print(json.dumps({"metric": "minhash_guard_identical_corpus", **guard}))
+    return record["exit"]
+
+
+def main() -> None:
+    from udacity_datalake_spark_spark.session import get_session
+
+    modes = {
+        "--hot-gram-evidence": run_hot_gram_evidence,
+        "--q148-evidence": run_q148_evidence,
+        "--sf1": run_sf1_tier,
+    }
+    run = next((f for flag, f in modes.items() if flag in sys.argv), run_decade)
+    spark = get_session(app_name="skew-bench")
+    code = run(spark, tempfile.mkdtemp(prefix="skewfix-"))
     spark.stop()
+    sys.exit(code or 0)
 
 
 if __name__ == "__main__":

@@ -12,9 +12,13 @@ into the next):
                  .localdata/sf1 fixture exists)
   3. bench     — frozen-42 headline sweep at sf0.1 (bench.py; prints
                  its JSON lines to stdout and writes no file)
-The slower tier scripts (bench_sf1.py, bench_sf1d.py, skew_bench.py)
-are opt-in via --tiers; they need the .localdata fixtures
-(scripts/make_sf1.py [--grow-dims]) and a verifiably idle host.
+The slower bench.py tiers are opt-in via --tiers: the frozen-42 at sf1,
+the dim-bound set at sf1d, the graph trio at sf1ds and the whole
+registry at sf0.1, each against its base tier.  Each writes bench.py's
+full sweep record (its "bench_sweep" line) to its artifact:
+BENCH_SF1.json, BENCH_SF1D.json (the sf1ds record under "skew_variant")
+and BENCH_REGISTRY.json.  They need the .localdata fixtures
+(scripts/make_sf1.py [--grow-dims [--skew]]) and a verifiably idle host.
 
 --quick (round 10, VERDICT r9 #7): the pre-commit loop (~9 min) —
 sharded suite (which already contains the full 411-query oracle-parity
@@ -74,16 +78,64 @@ QUICK_STAGES: list[tuple[str, list[str]]] = [
         ],
     ),
 ]
-TIER_STAGES: list[tuple[str, list[str]]] = [
-    ("bench_sf1", [sys.executable, "scripts/bench_sf1.py"]),
-    ("bench_sf1d", [sys.executable, "scripts/bench_sf1d.py"]),
+# (name, bench.py args, env, (artifact, key or None for the whole file))
+TIER_STAGES: list[tuple[str, list[str], dict, tuple[str, str | None]]] = [
+    (
+        "tier_sf1",
+        ["--base", "/root/testdata/sf0.1"],
+        {"SPARK_GRAFT_SF_DIR": ".localdata/sf1", "SPARK_GRAFT_BENCH_REPEATS": "3"},
+        ("BENCH_SF1.json", None),
+    ),
+    (
+        "tier_sf1d",
+        ["dim", "--base", "/root/testdata/sf0.1"],
+        {"SPARK_GRAFT_SF_DIR": ".localdata/sf1d", "SPARK_GRAFT_BENCH_REPEATS": "3"},
+        ("BENCH_SF1D.json", None),
+    ),
     # skewed-dim variant (round 9): graph trio on the mega-dim-replica
-    # decade; needs .localdata/sf1ds (make_sf1.py --grow-dims --skew)
-    ("bench_sf1ds", [sys.executable, "scripts/bench_sf1d.py", "--skew"]),
+    # tier against the uniform one, equal volume (bar 4); needs
+    # .localdata/sf1ds (make_sf1.py --grow-dims --skew)
+    (
+        "tier_sf1ds",
+        ["graph", "--base", ".localdata/sf1d"],
+        {"SPARK_GRAFT_SF_DIR": ".localdata/sf1ds", "SPARK_GRAFT_BENCH_REPEATS": "3"},
+        ("BENCH_SF1D.json", "skew_variant"),
+    ),
     # full-registry slope sweep (round 8): ~30 min, every registered
-    # query timed at sf0.01+sf0.1, >=20x slopes flagged
-    ("bench_registry", [sys.executable, "scripts/bench_registry.py"]),
+    # query timed at sf0.01+sf0.1
+    (
+        "tier_registry",
+        ["all"],
+        {"SPARK_GRAFT_BENCH_REPEATS": "2"},
+        ("BENCH_REGISTRY.json", None),
+    ),
 ]
+
+
+def write_artifact(stdout: str, artifact: tuple[str, str | None]) -> None:
+    """Write bench.py's full sweep record (its ``bench_sweep`` stdout
+    line) to ``artifact``: the whole file, or one key of the existing
+    file."""
+    for line in stdout.splitlines():
+        try:
+            record = json.loads(line)
+        except ValueError:
+            continue
+        if isinstance(record, dict) and record.get("metric") == "bench_sweep":
+            break
+    else:
+        return
+    name, key = artifact
+    path = os.path.join(REPO, name)
+    if key:
+        try:
+            with open(path) as f:
+                record = {**json.load(f), key: record}
+        except (OSError, ValueError):
+            record = {key: record}
+    with open(path, "w") as f:
+        json.dump(record, f, indent=1)
+        f.write("\n")
 
 
 def main() -> None:
@@ -92,16 +144,22 @@ def main() -> None:
         if a == "--skip" and i + 1 < len(sys.argv):
             skip = set(sys.argv[i + 1].split(","))
     base = QUICK_STAGES if "--quick" in sys.argv else STAGES
-    stages = [(n, c) for n, c in base if n not in skip]
+    stages = [(n, c, {}, None) for n, c in base if n not in skip]
     if "--tiers" in sys.argv:
-        stages += [(n, c) for n, c in TIER_STAGES if n not in skip]
+        stages += [
+            (n, [sys.executable, "bench.py", *args], env, artifact)
+            for n, args, env, artifact in TIER_STAGES
+            if n not in skip
+        ]
 
     results: list[tuple[str, bool, float, str]] = []
-    for name, cmd in stages:
+    for name, cmd, env, artifact in stages:
         t0 = time.perf_counter()
         proc = subprocess.run(
-            cmd, cwd=REPO, capture_output=True, text=True
+            cmd, cwd=REPO, capture_output=True, text=True, env={**os.environ, **env}
         )
+        if artifact:
+            write_artifact(proc.stdout, artifact)
         wall = round(time.perf_counter() - t0, 1)
         ok = proc.returncode == 0
         last = ""
@@ -109,9 +167,9 @@ def main() -> None:
             if line.strip():
                 last = line.strip()[:200]
                 break
-        # bench PASS additionally requires the parseable summary as the
-        # final line
-        if ok and name == "bench":
+        # a bench.py stage PASS additionally requires the parseable
+        # summary as the final line
+        if ok and cmd[1:2] == ["bench.py"]:
             try:
                 ok = json.loads(last).get("metric") == "headline_queries_total"
             except (ValueError, AttributeError):

@@ -487,7 +487,7 @@ def test_solo_bench_validates_before_session():
     import bench
 
     proc = subprocess.run(
-        [sys.executable, "scripts/solo_bench.py", "q999_not_a_query"],
+        [sys.executable, "bench.py", "q999_not_a_query"],
         cwd=os.path.dirname(bench.__file__),
         capture_output=True,
         text=True,
@@ -496,6 +496,125 @@ def test_solo_bench_validates_before_session():
     assert proc.returncode == 2
     assert "unknown query name" in proc.stderr
     assert "q999_not_a_query" in proc.stderr
+
+
+def test_bench_judge_flag_bar_from_tier_growth():
+    """The flag bar is twice the tiers' lineitem growth, floored at 4:
+    a decade pair gets 20, an equal-volume pair 4.0.  A slope under the
+    bar is not flagged and costs no output count."""
+    import bench
+
+    def no_count(name):
+        raise AssertionError(f"{name} counted without a flag")
+
+    decade = bench.judge({"q": 19.9}, {"q": 1.0}, (60_000, 600_000), {}, no_count)
+    assert decade["bar"] == 20.0
+    assert decade["slopes"] == {"q": 19.9}
+    assert (decade["flagged"], decade["exit"]) == ([], 0)
+    same = bench.judge({"q": 3.9}, {"q": 1.0}, (6_000_000, 6_000_000), {}, no_count)
+    assert same["bar"] == 4.0
+    assert same["exit"] == 0
+    one_tier = bench.judge({"q": 3.0}, {}, None, {}, no_count)
+    assert (one_tier["slopes"], one_tier["bar"], one_tier["exit"]) == ({}, None, 0)
+
+
+def test_bench_judge_output_growth_explains_flags():
+    """A flagged slope within the query's own output growth passes; one
+    that outgrew its output fails the sweep."""
+    import bench
+
+    rows = {"q_pairs": (100, 10_000), "q_plan": (100, 1_000)}
+    got = bench.judge(
+        {"q_pairs": 25.0, "q_plan": 25.0},
+        {"q_pairs": 1.0, "q_plan": 1.0},
+        (60_000, 600_000),
+        {},
+        rows.__getitem__,
+    )
+    assert got["adjudication"]["q_pairs"]["output_bound"] is True
+    assert got["adjudication"]["q_pairs"]["output_growth"] == 100.0
+    assert got["adjudication"]["q_plan"]["output_bound"] is False
+    assert (got["flagged"], got["exit"]) == (["q_plan"], 1)
+    explained = bench.judge(
+        {"q_pairs": 25.0}, {"q_pairs": 1.0}, (60_000, 600_000), {}, rows.__getitem__
+    )
+    assert (explained["flagged"], explained["exit"]) == ([], 0)
+
+
+def test_bench_judge_digest_override():
+    """A digest-shaped flag (equal row count at both tiers) passes only
+    through DIGEST_OUTPUT_BOUND; the same shape for an unlisted query,
+    or a listed query whose output grew, stays flagged."""
+    import bench
+
+    digest = next(iter(bench.DIGEST_OUTPUT_BOUND))
+    secs, base, decade = {digest: 25.0}, {digest: 1.0}, (60_000, 600_000)
+    ok = bench.judge(secs, base, decade, {}, lambda n: (1, 1))
+    assert ok["adjudication"][digest]["adjudicated_by"] == (
+        bench.DIGEST_OUTPUT_BOUND[digest]
+    )
+    assert (ok["flagged"], ok["exit"]) == ([], 0)
+    grew = bench.judge(secs, base, decade, {}, lambda n: (1, 2))
+    assert (grew["flagged"], grew["exit"]) == ([digest], 1)
+    unlisted = bench.judge(
+        {"q_digest": 25.0}, {"q_digest": 1.0}, decade, {}, lambda n: (1, 1)
+    )
+    assert (unlisted["flagged"], unlisted["exit"]) == (["q_digest"], 1)
+
+
+def test_bench_judge_errors_exit_1():
+    """A query that failed to time, or a flagged query whose output
+    count fails, is an error and the sweep exits 1."""
+    import bench
+
+    failed = bench.judge({}, {}, (60_000, 600_000), {"q": "boom"}, None)
+    assert (failed["errors"], failed["exit"]) == ({"q": "boom"}, 1)
+
+    def broken(name):
+        raise RuntimeError("count failed\nstack")
+
+    got = bench.judge({"q": 30.0}, {"q": 1.0}, (60_000, 600_000), {}, broken)
+    assert got["errors"] == {"q": "count failed"}
+    assert (got["flagged"], got["exit"]) == (["q"], 1)
+
+
+def test_bench_report_lines_fit_tail():
+    """What bench.main() prints for a two-tier frozen-42 sweep: the full
+    record (both tiers, slopes, verdict — longer than the 2000-char
+    tail) comes first, and the per-query seconds plus the compact
+    summary, the last two lines, fit the tail together."""
+    import json
+
+    import bench
+
+    names = bench.HEADLINE
+    record = {
+        "queries": {n: 123.4567 for n in names},
+        "base_queries": {n: 12.3456 for n in names},
+        **bench.judge(
+            {n: 123.4567 for n in names},
+            {n: 1.2345 for n in names},
+            (60_000, 600_000),
+            {n: "x" * 200 for n in names[:3]},
+            lambda n: (1, 1_000_000),
+        ),
+    }
+    lines = bench.report_lines(
+        record, "/root/testdata/sf0.1", "/root/testdata/sf0.01"
+    )
+    sweep, detail, final = (json.loads(ln) for ln in lines)
+    assert sweep["metric"] == "bench_sweep"
+    assert (sweep["sf"], sweep["base_sf"], sweep["bar"]) == (0.1, 0.01, 20.0)
+    assert set(sweep["slopes"]) == set(sweep["adjudication"]) == set(names)
+    assert len(lines[0]) > 2000
+    assert detail == {
+        "metric": "headline_queries_detail",
+        "queries": record["queries"],
+        "sf": 0.1,
+    }
+    assert final["metric"] == "headline_queries_total"
+    assert final["n_queries"] == len(names)
+    assert len(lines[1]) + 1 + len(lines[2]) < 2000
 
 
 def test_bench_duration_scaled_repeats():

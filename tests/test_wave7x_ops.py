@@ -238,6 +238,26 @@ def test_apriori_prefilter_gate_result_invariant(spark):
     items.unpersist()
 
 
+def test_apriori_all_null_baskets_count_toward_support(spark):
+    """A basket whose items are all NULL is still a basket: it raises
+    the support threshold like any other.  10 baskets hold {A, B, C};
+    at support_denom 2 the triple (support 10) is frequent while
+    10 * 2 >= n_baskets, so 9 all-NULL baskets (n = 19) keep it and 11
+    (n = 21) push it below support.  Counting only baskets with a
+    non-null item would see n = 10 both times and keep it."""
+    from udacity_datalake_spark_spark.plans.wave67 import apriori_triples
+
+    def triples(n_null_baskets):
+        rows = [(o, p) for o in range(10) for p in ("A", "B", "C")]
+        rows += [(100 + o, None) for o in range(n_null_baskets)]
+        items = spark.createDataFrame(rows, "o long, p string")
+        out = apriori_triples(items, support_denom=2).collect()
+        return sorted((r.p1, r.p2, r.p3, r.support) for r in out)
+
+    assert triples(9) == [("A", "B", "C", 10)]
+    assert triples(11) == []
+
+
 def test_bpe_merges_planted_and_greedy(spark):
     """BPE merge table on a corpus with known pair counts: ('a','b')
     dominates round 1 (overlap-counted), the merged symbol pairs with

@@ -291,14 +291,15 @@ def oriented_by_degree(edges: DataFrame) -> DataFrame:
     )
 
 
-#: Dense/small-graph gate for ``triangles``: below BOTH bounds the
-#: count comes from one Arrow fetch + BLAS matmul on the driver — the
-#: same bounded-driver-materialization class as the ≤1e5-edge
-#: union-find gate in operators.graph (collected bytes ≤ ~3 MB; the
-#: n×n matrices at the node cap are 4096² × 4 B = 64 MB each).  Above
-#: either bound the oriented wedge join runs unchanged.
-TRI_DENSE_EDGES = 200_000
-TRI_DENSE_NODES = 4_096
+#: Dense/small-graph gate for ``triangles`` and
+#: ``wave49.link_prediction_topk``: below BOTH bounds the result comes
+#: from one Arrow fetch + BLAS matmul on the driver — the same
+#: bounded-driver-materialization class as the ≤1e5-edge union-find
+#: gate in operators.graph (collected bytes ≤ ~3 MB; the n×n matrices
+#: at the node cap are 4096² × 4 B = 64 MB each).  Above either bound
+#: the distributed wedge join runs unchanged.
+DENSE_GATE_EDGES = 200_000
+DENSE_GATE_NODES = 4_096
 
 
 def dense_gate_fetch(edges: DataFrame, cols: list[str], gate_edges: int):
@@ -343,13 +344,32 @@ def dense_gate_fetch(edges: DataFrame, cols: list[str], gate_edges: int):
         return None
 
 
+def dense_adjacency(u, w, gate_nodes: int):
+    """``(ids, A)`` for the fetched edge arrays of ``dense_gate_fetch``:
+    ``ids`` the ascending distinct node ids, ``A`` the symmetric float32
+    adjacency matrix indexed by position in ``ids`` (A @ A counts common
+    neighbors exactly while n < 2²⁴).  ``None`` when the graph has more
+    than ``gate_nodes`` nodes (distributed path)."""
+    import numpy as np
+
+    ids = np.unique(np.concatenate([u, w]))
+    if len(ids) > gate_nodes:
+        return None
+    ui = np.searchsorted(ids, u)
+    wi = np.searchsorted(ids, w)
+    A = np.zeros((len(ids), len(ids)), dtype=np.float32)
+    A[ui, wi] = 1.0
+    A[wi, ui] = 1.0
+    return ids, A
+
+
 def triangles(
     edges: DataFrame,
     orientation: str = "auto",
     wedge_budget: int = 1_000_000,
     packable_ids: bool = False,
-    dense_gate_edges: int = TRI_DENSE_EDGES,
-    dense_gate_nodes: int = TRI_DENSE_NODES,
+    dense_gate_edges: int = DENSE_GATE_EDGES,
+    dense_gate_nodes: int = DENSE_GATE_NODES,
 ) -> DataFrame:
     """Single-row triangle count of an undirected (u < w) edge list via
     an oriented wedge join.  Two orientations, both exact (the count is
@@ -387,29 +407,20 @@ def triangles(
     the dense path (and to brute force) on arbitrary small graphs by
     tests/test_properties.py::test_degree_oriented_triangles_property."""
     fetched = dense_gate_fetch(edges, ["u", "w"], dense_gate_edges)
-    if fetched is not None:
+    dense = None if fetched is None else dense_adjacency(*fetched, dense_gate_nodes)
+    if dense is not None:
         import numpy as np
         from pyspark.sql import types as T
 
         out_schema = T.StructType(
             [T.StructField("n_triangles", T.LongType(), False)]
         )
-        u, w = fetched
-        ids = np.unique(np.concatenate([u, w]))
-        if len(ids) <= dense_gate_nodes:
-            if len(ids) == 0:
-                return edges.sparkSession.createDataFrame([(0,)], out_schema)
-            n = len(ids)
-            ui = np.searchsorted(ids, u)
-            wi = np.searchsorted(ids, w)
-            A = np.zeros((n, n), dtype=np.float32)
-            A[ui, wi] = 1.0
-            A[wi, ui] = 1.0
-            C = (A @ A).astype(np.int64)
-            # each triangle contributes one common-neighbor hit per
-            # ordered adjacent pair: 3 edges × 2 directions = 6
-            tri = int(C[A > 0.0].sum()) // 6
-            return edges.sparkSession.createDataFrame([(tri,)], out_schema)
+        _, A = dense
+        C = (A @ A).astype(np.int64)
+        # each triangle contributes one common-neighbor hit per ordered
+        # adjacent pair: 3 edges × 2 directions = 6
+        tri = int(C[A > 0.0].sum()) // 6
+        return edges.sparkSession.createDataFrame([(tri,)], out_schema)
     if orientation == "auto":
         stats = (
             edges.groupBy("u")

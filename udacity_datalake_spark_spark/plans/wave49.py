@@ -18,7 +18,10 @@ from udacity_datalake_spark_spark.operators.topk import ranked_topk
 from udacity_datalake_spark_spark.plans.registry import query
 from udacity_datalake_spark_spark.plans.wave15 import (
     COSUPPLY_EDGES_SQL,
+    DENSE_GATE_EDGES,
+    DENSE_GATE_NODES,
     cosupply_edges,
+    dense_adjacency,
     dense_gate_fetch,
 )
 from udacity_datalake_spark_spark.sources.readers import read_table
@@ -131,22 +134,12 @@ def q318_admission_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Dense-graph gate for link_prediction_topk: below BOTH bounds the
-#: common-neighbor counts come from one BLAS matmul on the driver —
-#: the same bounded-driver-materialization class as the ≤1e5-edge
-#: union-find gate in operators.graph (collected bytes ≤ ~3 MB; the
-#: n×n count matrix at the node cap is 4096² × 4 B = 64 MB).  Above
-#: either bound the distributed wedge join runs unchanged.
-MAX_DENSE_CN_EDGES = 200_000
-MAX_DENSE_CN_NODES = 4_096
-
-
 def link_prediction_topk(
     spark: SparkSession,
     edges: DataFrame,
     k: int = 20,
-    dense_gate_edges: int = MAX_DENSE_CN_EDGES,
-    dense_gate_nodes: int = MAX_DENSE_CN_NODES,
+    dense_gate_edges: int = DENSE_GATE_EDGES,
+    dense_gate_nodes: int = DENSE_GATE_NODES,
 ) -> DataFrame:
     """Top-``k`` NON-adjacent pairs of the undirected graph ``edges``
     (columns u < w) ranked by common-neighbor count (ties → smaller x,
@@ -186,35 +179,26 @@ def link_prediction_topk(
             T.StructField("rn", T.IntegerType(), False),
         ]
     )
-    if fetched is not None:
+    dense = None if fetched is None else dense_adjacency(*fetched, dense_gate_nodes)
+    if dense is not None:
         import numpy as np
 
-        u, w = fetched
-        ids = np.unique(np.concatenate([u, w]))  # ascending
-        if len(ids) == 0:
-            return spark.createDataFrame([], out_schema)
-        if len(ids) <= dense_gate_nodes:
-            n = len(ids)
-            ui = np.searchsorted(ids, u)
-            wi = np.searchsorted(ids, w)
-            A = np.zeros((n, n), dtype=np.float32)
-            A[ui, wi] = 1.0
-            A[wi, ui] = 1.0
-            # A@A[i,j] = |N(i) ∩ N(j)| — exact in float32 below 2^24
-            C = (A @ A).astype(np.int64)
-            iu, ju = np.triu_indices(n, k=1)
-            nc = C[iu, ju]
-            keep = (nc > 0) & (A[iu, ju] == 0.0)
-            # ids is ascending, so compacted i < j ⟺ original x < y
-            cands = sorted(
-                zip(nc[keep].tolist(), iu[keep].tolist(), ju[keep].tolist()),
-                key=lambda t: (-t[0], t[1], t[2]),
-            )[:k]
-            rows = [
-                (int(ids[i]), int(ids[j]), int(c), r + 1)
-                for r, (c, i, j) in enumerate(cands)
-            ]
-            return spark.createDataFrame(rows, out_schema)
+        ids, A = dense
+        # A@A[i,j] = |N(i) ∩ N(j)|
+        C = (A @ A).astype(np.int64)
+        iu, ju = np.triu_indices(len(ids), k=1)
+        nc = C[iu, ju]
+        keep = (nc > 0) & (A[iu, ju] == 0.0)
+        # ids is ascending, so compacted i < j ⟺ original x < y
+        cands = sorted(
+            zip(nc[keep].tolist(), iu[keep].tolist(), ju[keep].tolist()),
+            key=lambda t: (-t[0], t[1], t[2]),
+        )[:k]
+        rows = [
+            (int(ids[i]), int(ids[j]), int(c), r + 1)
+            for r, (c, i, j) in enumerate(cands)
+        ]
+        return spark.createDataFrame(rows, out_schema)
     und = edges.select("u", "w").unionAll(
         edges.select(F.col("w").alias("u"), F.col("u").alias("w"))
     )

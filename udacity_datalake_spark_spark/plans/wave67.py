@@ -110,11 +110,12 @@ def apriori_triples(
     prefilter_universe_gt: int = 1024,
 ) -> DataFrame:
     """One Apriori level (Agrawal & Srikant 1994) over a distinct
-    ``(o, p)`` basket-item frame (``p`` non-null): frequent 3-itemsets
-    at relative support ≥ 1/``support_denom`` of baskets.  Candidate
-    triples come ONLY from joining frequent pairs sharing their first
-    item, pruned by the third-subset-frequent check; one counting pass
-    confirms support.
+    ``(o, p)`` basket-item frame: frequent 3-itemsets at relative
+    support ≥ 1/``support_denom`` of baskets.  NULL items are dropped,
+    but every distinct ``o`` counts as a basket, including one whose
+    items are all NULL.  Candidate triples come ONLY from joining
+    frequent pairs sharing their first item, pruned by the
+    third-subset-frequent check; one counting pass confirms support.
 
     Scale shape (round 12, guide §2.3/§2.4): the per-basket item ARRAY
     is built once (one groupBy-``o`` exchange, persisted here — callers
@@ -143,9 +144,11 @@ def apriori_triples(
     # (prefilter gate — approximate is fine for an order-of-magnitude
     # branch, and mixing a second EXACT distinct into the same agg would
     # plan an Expand that doubles the scan).  Running it over the
-    # exploded persisted baskets materializes the cache in the same job.
+    # exploded persisted baskets materializes the cache in the same job;
+    # explode_outer keeps the empty arrays of all-NULL baskets in the
+    # basket count (approx_count_distinct ignores the NULL it emits).
     st = (
-        baskets.select("o", F.explode("__ps").alias("p"))
+        baskets.select("o", F.explode_outer("__ps").alias("p"))
         .agg(
             F.countDistinct("o").alias("nb"),
             F.approx_count_distinct("p").alias("np"),
